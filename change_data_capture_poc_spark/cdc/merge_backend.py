@@ -9,7 +9,15 @@ rows and the *backend* makes them durable. The contract:
     apply(spark, path, rows, partition_col)
 
 replaces every ``partition_col`` partition that appears in ``rows``
-with exactly those rows, leaving all other partitions untouched.
+with exactly those rows, leaving all other partitions untouched, and
+
+    read(spark, path, schema)
+
+returns the table as the backend's readers see it. ``schema`` is the
+table's known schema: a parquet read takes it instead of inferring one
+from a file footer in a Spark job; a Delta read takes it from the
+transaction log, which also hides the files ``replaceWhere`` removed.
+
 Replace-partitions is idempotent by construction — re-applying the
 same rows yields a byte-identical table — which is what makes the
 foreachBatch stream safely replayable after a checkpoint restart
@@ -43,6 +51,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
 from change_data_capture_poc_spark.functions.caching import persist_once
 
 
@@ -66,6 +76,17 @@ class ParquetOverwriteBackend:
         rows.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(partition_col).parquet(path)
+
+    def read(
+        self,
+        spark: SparkSession,
+        path: str,
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """The table's files under ``schema`` (partition columns
+        last); with no schema, Spark infers one from a file footer."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
 
 
 class DeltaReplaceWhereBackend:
@@ -122,6 +143,18 @@ class DeltaReplaceWhereBackend:
             )
         finally:
             rows.unpersist()
+
+    def read(
+        self,
+        spark: SparkSession,
+        path: str,
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """The table's current snapshot. Delta takes the schema from its
+        own log and refuses a user-specified one, so ``schema`` is
+        unused; reading the directory as parquet would also return the
+        files a ``replaceWhere`` commit logically removed."""
+        return spark.read.format("delta").load(path)
 
 
 def replace_where_predicate(partition_col: str, parts: list) -> str | None:

@@ -35,7 +35,7 @@ the incremental path keeps state in the table, not in memory
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Primary path leaves open rows at 9999-01-01 00:00:00
@@ -44,6 +44,11 @@ from pyspark.sql import functions as F
 # implemented per-variant (SURVEY.md §7 fidelity traps).
 SCD2_SENTINEL = "9999-01-01 00:00:00"
 MERGE_SENTINEL = "9999-12-31 23:59:59"
+
+
+# Attributes an SCD2 version carries when the caller names none: the
+# product table's row image (initdb/01_init_schema.sql:8-13).
+DEFAULT_ATTRS = ("name", "description", "price")
 
 
 def scd2_recompute(cdc_events: DataFrame,
@@ -60,18 +65,36 @@ def scd2_recompute(cdc_events: DataFrame,
     its version row carries NULL attributes and stays open — required
     for parity (SURVEY.md T3).
     """
-    attr_fields = attr_fields or ["name", "description", "price"]
+    attrs = [
+        F.col("after_row_value").getField(f).alias(f)
+        for f in attr_fields or DEFAULT_ATTRS
+    ]
+    return scd2_chain(cdc_events, attrs)
+
+
+def scd2_chain(rows: DataFrame, attrs: list[Column],
+               *extra: Column) -> DataFrame:
+    """The per-key version chain behind every SCD2 build: one window
+    over ``partitionBy(id).orderBy(log_seq_num)`` numbers each key's
+    versions and closes each at the next version's
+    ``source_timestamp``; the newest stays open until the sentinel.
+
+    ``rows`` holds one row per event (id, operation_type, log_seq_num,
+    source_timestamp, plus whatever ``attrs`` and ``extra`` read);
+    ``attrs`` are the version's attribute columns and ``extra`` is
+    appended after the SCD2 columns. Rebuilding a key from its event
+    set is exact for any delivery order, so the incremental stream
+    (streaming/scd2_stream.py) feeds it a key's stored versions plus
+    its new events and needs no late-event path.
+    """
     w = Window.partitionBy("id").orderBy("log_seq_num")
 
     ranked = (
-        cdc_events.where(F.col("id").isNotNull())
+        rows.where(F.col("id").isNotNull())
         .withColumn("version_number", F.row_number().over(w))
         .withColumn("next_change_timestamp",
                     F.lead("source_timestamp").over(w))
     )
-    attrs = [
-        F.col("after_row_value").getField(f).alias(f) for f in attr_fields
-    ]
     return ranked.select(
         F.col("id"),
         *attrs,
@@ -82,6 +105,7 @@ def scd2_recompute(cdc_events: DataFrame,
             F.col("next_change_timestamp"),
             F.lit(SCD2_SENTINEL).cast("timestamp"),
         ).alias("row_valid_expiration_timestamp"),
+        *extra,
     )
 
 

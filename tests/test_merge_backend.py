@@ -242,3 +242,67 @@ def test_delta_backend_write_path_contract(spark, monkeypatch, tmp_path):
         spark, target, rows.where(F.lit(False)), partition_col="bucket"
     )
     assert "save" not in calls
+
+
+def test_incremental_scd2_reads_through_backend(spark, tmp_path):
+    """The merge's table read and result() both go through the
+    backend's read, under the table's fixed schema, and result() keeps
+    exactly scd2_recompute's columns in order."""
+    from change_data_capture_poc_spark.cdc.envelope import decode_envelope
+    from change_data_capture_poc_spark.cdc.generator import CdcGenerator
+    from change_data_capture_poc_spark.cdc.scd2 import scd2_recompute
+    from change_data_capture_poc_spark.streaming.scd2_stream import (
+        IncrementalScd2,
+    )
+
+    reads = []
+
+    class Recording(ParquetOverwriteBackend):
+        def read(self, spark_, path, schema=None):
+            reads.append((path, schema))
+            return super().read(spark_, path, schema)
+
+    scd2_path = str(tmp_path / "scd2")
+    inc = IncrementalScd2(spark, str(tmp_path / "log"), scd2_path,
+                          n_buckets=4, merge_backend=Recording())
+    batch = CdcGenerator(seed=3).products_df(spark, num_records=40)
+    inc.process_batch(batch, batch_id=0)  # the table does not exist yet
+    inc.process_batch(batch, batch_id=0)  # a replay reads it
+    out = inc.result()
+
+    assert inc.schema is not None
+    assert reads == [(scd2_path, inc.schema)] * 3
+    assert out.columns == scd2_recompute(decode_envelope(batch)).columns
+
+
+def test_delta_backend_read_path_contract(spark, monkeypatch, tmp_path):
+    """DeltaReplaceWhereBackend.read loads the table with the Delta
+    reader, whose log decides which files are live (a bare parquet read
+    would also return the files replaceWhere removed), and passes no
+    user schema, which Delta refuses."""
+    import sys
+    import types
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
+    table = spark.createDataFrame([(0, 1)], "bucket int, id int")
+    calls = {}
+
+    def recorder(name, result):
+        def rec(self, *args, **kwargs):
+            calls[name] = args
+            return self if result is None else result
+        return rec
+
+    monkeypatch.setattr(DataFrameReader, "format", recorder("format", None))
+    monkeypatch.setattr(DataFrameReader, "schema", recorder("schema", None))
+    monkeypatch.setattr(DataFrameReader, "load", recorder("load", table))
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        recorder("parquet", table))
+
+    target = str(tmp_path / "delta_table")
+    got = DeltaReplaceWhereBackend().read(spark, target, table.schema)
+
+    assert got is table
+    assert calls == {"format": ("delta",), "load": (target,)}

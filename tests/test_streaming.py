@@ -87,6 +87,30 @@ def test_incremental_scd2_converges_to_batch(spark, tmp_path):
     assert got == want
 
 
+def test_incremental_scd2_scans_batch_source_once(spark, tmp_path):
+    """Each micro-batch's source is read by one action: the stream's
+    summed numInputRows equals the envelopes landed. A second action on
+    the batch DataFrame would read its files, and count its rows,
+    again."""
+    df = CdcGenerator(seed=7).products_df(spark, num_records=60)
+    src = str(tmp_path / "src")
+    n = _write_chunks(spark, df, src, n_chunks=3)
+
+    stream = stream_envelope_log(spark, src, PRODUCT_FIELDS,
+                                 max_files_per_trigger=1)
+    q, _ = run_incremental_scd2(
+        spark,
+        stream,
+        log_path=str(tmp_path / "log"),
+        scd2_path=str(tmp_path / "scd2"),
+        checkpoint=str(tmp_path / "ckpt"),
+        n_buckets=4,
+    )
+    assert q.awaitTermination(300)
+    assert len(q.recentProgress) == 3
+    assert sum(p.numInputRows for p in q.recentProgress) == n
+
+
 def test_session_window_matches_sessionize(spark):
     import datetime
 

@@ -7,8 +7,9 @@ that class of mistake mechanical to catch:
 
 1. ORDER: the commit that first added `X_before.txt` must not be newer
    than the one that first added `X_after.txt`.
-2. STALENESS (WARN only): a pair that is identical or >= 98% similar
-   after normalizing expression IDs (`#123`), hex ids and whitespace
+2. STALENESS (WARN only, on pairs not flagged by 1): a pair that is
+   identical or >= 98% similar after normalizing expression IDs
+   (`#123`), hex ids and whitespace
    either re-captured a stale before (the r13 ER capture normalized to
    99.9% similarity) or belongs to a PLAN-NEUTRAL change (driver-loop /
    checkpoint work) — verify the optimization writeup cites jobs/bytes
@@ -24,6 +25,7 @@ after file by design).
 
 from __future__ import annotations
 
+import difflib
 import glob
 import os
 import re
@@ -34,11 +36,13 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _first_add_time(path: str) -> int | None:
-    """Unix time of the commit that first ADDED path (None: untracked)."""
+    """Unix time of the commit that first ADDED path (None: untracked),
+    asked of the repository that holds path."""
     out = subprocess.run(
         [
-            "git", "-C", HERE, "log", "--follow", "--diff-filter=A",
-            "--format=%ct", "--", path,
+            "git", "-C", os.path.dirname(os.path.abspath(path)), "log",
+            "--follow", "--diff-filter=A", "--format=%ct", "--",
+            os.path.basename(path),
         ],
         capture_output=True,
         text=True,
@@ -78,7 +82,7 @@ def main() -> None:
                     f"after capture — re-capture from the pre-change "
                     f"commit"
                 )
-            import difflib
+                continue  # a flagged pair is re-captured anyway
 
             nb, na = _normalized(before), _normalized(after)
             r = 1.0 if nb == na else difflib.SequenceMatcher(
