@@ -24,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.cdc.net_effect import (
+    NET_EFFECT_SQL,
+    event_ops,
+    net_effect_changes,
+    net_effect_state,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.windows import global_window
@@ -44,34 +50,7 @@ def _with_split_lsn(events: DataFrame) -> DataFrame:
 
 @register(
     "cdc_net_effect_compaction",
-    oracle="""
-    WITH ops AS (
-        SELECT user_id, event_id, value,
-               CASE event_type WHEN 'signup' THEN 'c'
-                               WHEN 'error'  THEN 'd'
-                               ELSE 'u' END AS op
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    agg AS (
-        SELECT user_id,
-               arg_min(op, event_id)    AS first_op,
-               arg_max(op, event_id)    AS last_op,
-               arg_max(value, event_id) AS last_value,
-               max(event_id)            AS last_event_id,
-               count(*)                 AS n_ops
-        FROM ops GROUP BY user_id
-    )
-    SELECT user_id,
-           CASE WHEN last_op = 'd' THEN 'd'
-                WHEN first_op = 'c' THEN 'c'
-                ELSE 'u' END AS net_op,
-           CASE WHEN last_op = 'd' THEN NULL
-                ELSE ROUND(last_value + 1e-9, 6) END AS net_value,
-           last_event_id,
-           CAST(n_ops AS BIGINT) AS n_ops
-    FROM agg
-    WHERE NOT (first_op = 'c' AND last_op = 'd')
-    """,
+    oracle=NET_EFFECT_SQL,
     doc="Net-effect compaction of a CDC batch (Debezium 'event "
         "flattening'): all operations for a key collapse to the single "
         "change the batch is equivalent to — create+...+delete "
@@ -84,36 +63,7 @@ def _with_split_lsn(events: DataFrame) -> DataFrame:
 )
 def cdc_net_effect_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    ops = events.where(F.col("user_id").isNotNull()).select(
-        "user_id",
-        "event_id",
-        "value",
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
-    )
-    agg = ops.groupBy("user_id").agg(
-        F.min_by("op", "event_id").alias("first_op"),
-        F.max_by("op", "event_id").alias("last_op"),
-        F.max_by("value", "event_id").alias("last_value"),
-        F.max("event_id").alias("last_event_id"),
-        F.count(F.lit(1)).alias("n_ops"),
-    )
-    return agg.where(
-        ~((F.col("first_op") == "c") & (F.col("last_op") == "d"))
-    ).select(
-        "user_id",
-        F.when(F.col("last_op") == "d", F.lit("d"))
-        .when(F.col("first_op") == "c", F.lit("c"))
-        .otherwise(F.lit("u"))
-        .alias("net_op"),
-        F.when(F.col("last_op") == "d", F.lit(None).cast("double"))
-        .otherwise(F.round(F.col("last_value") + F.lit(1e-9), 6))
-        .alias("net_value"),
-        "last_event_id",
-        "n_ops",
-    )
+    return net_effect_changes(net_effect_state(event_ops(events)))
 
 
 @register(

@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.registry import register
-from change_data_capture_poc_spark.sources.tables import load_table
+from change_data_capture_poc_spark.sources.tables import (
+    EMBEDDING_DIM,
+    load_table,
+)
 
 _CHUNK_W = 32  # tokens per chunk
 _CHUNK_S = 24  # stride (overlap = W - S = 8)
@@ -188,10 +191,7 @@ def corpus_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MG_K = 64  # Misra-Gries counter budget => finds tokens with freq > N/64
 
-
-@register(
-    "text_heavy_hitters_misra_gries",
-    oracle=f"""
+_MG_ORACLE = f"""
     WITH toks AS (
         SELECT unnest(string_split(text, ' ')) AS tok FROM documents
     ),
@@ -200,30 +200,20 @@ _MG_K = 64  # Misra-Gries counter budget => finds tokens with freq > N/64
     FROM toks, n
     GROUP BY tok, n.n
     HAVING COUNT(*) > n.n / {_MG_K}
-    """,
-    doc=f"Exact heavy hitters (tokens with frequency > N/{_MG_K}) via "
-        f"the two-pass sketch pattern: phase 1 folds each partition "
-        f"through a {_MG_K}-counter Misra-Gries summary (Arrow "
-        f"mapInPandas, bounded state, zero shuffle) whose survivors "
-        f"are a GUARANTEED superset of the true heavy hitters "
-        f"(pigeonhole: a token over-threshold globally is "
-        f"over-threshold in some partition); phase 2 rescans with an "
-        f"exact count restricted to the <= {_MG_K} x partitions "
-        f"candidates (broadcast semi-join) and applies the threshold "
-        f"on exact counts. Output is therefore EXACT and "
-        f"partitioning-independent — the oracle is the plain "
-        f"full-vocabulary GROUP BY the sketch avoids shuffling at "
-        f"100 TB.",
-)
-def text_heavy_hitters_misra_gries(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import pandas as pd
+    """
 
-    toks = load_table(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("tok")
-    )
-    n = toks.agg(F.count("*").alias("n"))
+
+def _mg_tokens(docs: DataFrame) -> DataFrame:
+    """Every space-split token of ``docs.text``, as ``tok``."""
+    return docs.select(F.explode(F.split("text", " ")).alias("tok"))
+
+
+def _mg_candidates(toks: DataFrame) -> DataFrame:
+    """Each partition's Misra-Gries survivors: a superset of the tokens
+    over N/_MG_K, one row per survivor per partition (pigeonhole: a
+    token over-threshold globally is over-threshold in some partition,
+    micro-batches included)."""
+    import pandas as pd
 
     def mg(batches):
         counters: dict[str, int] = {}
@@ -244,7 +234,12 @@ def text_heavy_hitters_misra_gries(
         if counters:
             yield pd.DataFrame({"tok": list(counters)})
 
-    cand = toks.mapInPandas(mg, "tok string").distinct()
+    return toks.mapInPandas(mg, "tok string")
+
+
+def _mg_heavy_hitters(toks: DataFrame, cand: DataFrame) -> DataFrame:
+    """(tok, cnt) for the candidates whose exact count exceeds N/_MG_K."""
+    n = toks.agg(F.count("*").alias("n"))
     # bounded: Misra-Gries heavy hitters, counter-capacity-capped
     exact = toks.join(F.broadcast(cand), "tok").groupBy("tok").agg(
         F.count("*").cast("long").alias("cnt")
@@ -257,12 +252,39 @@ def text_heavy_hitters_misra_gries(
     )
 
 
+@register(
+    "text_heavy_hitters_misra_gries",
+    oracle=_MG_ORACLE,
+    doc=f"Exact heavy hitters (tokens with frequency > N/{_MG_K}) via "
+        f"the two-pass sketch pattern: phase 1 folds each partition "
+        f"through a {_MG_K}-counter Misra-Gries summary (Arrow "
+        f"mapInPandas, bounded state, zero shuffle) whose survivors "
+        f"are a GUARANTEED superset of the true heavy hitters "
+        f"(pigeonhole: a token over-threshold globally is "
+        f"over-threshold in some partition); phase 2 rescans with an "
+        f"exact count restricted to the <= {_MG_K} x partitions "
+        f"candidates (broadcast semi-join) and applies the threshold "
+        f"on exact counts. Output is therefore EXACT and "
+        f"partitioning-independent — the oracle is the plain "
+        f"full-vocabulary GROUP BY the sketch avoids shuffling at "
+        f"100 TB.",
+)
+def text_heavy_hitters_misra_gries(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    toks = _mg_tokens(load_table(spark, sf_dir, "documents"))
+    return _mg_heavy_hitters(toks, _mg_candidates(toks).distinct())
+
+
 _MP_K = 5   # final top-k
 _MP_P = 2   # probed partitions per query
 _MP_NQ = 8  # query set size
 
-# Per-dimension mean as an inline SQL list constructor (64 avg exprs).
-_CENTROID_LIST = "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(64)) + "]"
+# Per-dimension mean as an inline SQL list constructor (one avg expr
+# per embedding dimension).
+_CENTROID_LIST = (
+    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(EMBEDDING_DIM)) + "]"
+)
 
 
 @register(
@@ -353,16 +375,17 @@ def ann_ivf_multiprobe_recall(
         F.col("nv").alias("qnv"),
     )
 
-    # Per-label centroid: ONE map-side-partial aggregation with 64
-    # per-dimension avg columns (r14 — the shape the sampled-truth twin
+    # Per-label centroid: ONE map-side-partial aggregation with one
+    # avg column per dimension (r14 — the shape the sampled-truth twin
     # already uses, and the oracle's own {_CENTROID_LIST} formulation).
     # The old posexplode -> (label, pos) mean -> regroup decomposed the
     # vectors into n x dim scalar rows and shuffled them TWICE; here
     # only |labels| x dim partial sums cross the exchange (guide §2.3
     # "aggregate before you shuffle").
-    dim = 64
     cent = e.groupBy("label").agg(
-        F.array(*[F.avg(F.col("v")[i]) for i in range(dim)]).alias("c")
+        F.array(
+            *[F.avg(F.col("v")[i]) for i in range(EMBEDDING_DIM)]
+        ).alias("c")
     )
     cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
 

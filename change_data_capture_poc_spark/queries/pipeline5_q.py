@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.queries.pipeline4_q import _CENTROID_LIST
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -191,11 +192,6 @@ _HN_CEIL = 0.95  # near-dup ceiling: candidates above this are assumed
                  # false negatives (mislabeled near-duplicates) and skipped
 _HN_P = 3        # IVF probes: nearest OTHER-label partitions mined per query
 
-# Per-dimension mean as an inline SQL list constructor (64 avg exprs) —
-# same centroid construction as ann_ivf_multiprobe_recall's oracle.
-_HN_CENTROID_LIST = (
-    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(64)) + "]"
-)
 
 
 @register(
@@ -205,7 +201,7 @@ _HN_CENTROID_LIST = (
                FROM embeddings),
     q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv
           FROM e WHERE vec_id < {_HN_NQ}),
-    cent AS (SELECT label, {_HN_CENTROID_LIST} AS c FROM e GROUP BY label),
+    cent AS (SELECT label, {_CENTROID_LIST} AS c FROM e GROUP BY label),
     probed AS (
         SELECT q_id, label FROM (
             SELECT q.q_id, cent.label,

@@ -56,6 +56,23 @@ _SS_K = 8  # minimum duplicated-substring length in tokens (Lee et al.
            # vocabulary needs a shorter window for real collisions)
 
 
+def _ss_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, gh): every overlapping _SS_K-token window of each
+    document, md5-hashed in the map stage."""
+    toks = docs.select("doc_id", F.split("text", " ").alias("w")).where(
+        F.size("w") >= _SS_K
+    )
+    return toks.select(
+        "doc_id",
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, size(w) - {_SS_K}),"
+                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
+            )
+        ).alias("pos", "gh"),
+    )
+
+
 @register(
     "dedup_substring_suffix_runs",
     oracle=f"""
@@ -116,20 +133,7 @@ _SS_K = 8  # minimum duplicated-substring length in tokens (Lee et al.
 def dedup_substring_suffix_runs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("w")).where(
-        F.size("w") >= _SS_K
-    )
-    # Overlapping K-grams, hashed in the map stage: (doc_id, pos, gh).
-    grams = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {_SS_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
-            )
-        ).alias("pos", "gh"),
-    )
+    grams = _ss_grams(load_table(spark, sf_dir, "documents"))
     # Duplicate test as ONE gh-keyed window count (r14): the old
     # agg-then-self-join shape executed the gram explode + md5 pass
     # twice and shuffled the gram table twice (once into the count agg,
@@ -449,11 +453,11 @@ _HLL_M = 64          # registers (b = 6 index bits)
 _HLL_WBITS = 26      # 32-bit md5-prefix hash minus 6 index bits
 _HLL_ALPHA = 0.709   # canonical alpha_64
 
-
-@register(
-    "agg_hll_portable",
-    oracle=f"""
-    WITH h AS (
+# The register table as DuckDB CTEs h, r, reg and s (per event_type:
+# registers hit, scaled-integer register sum); agg_hll_portable and its
+# stream twin streaming_hll_register_drain both read their estimate
+# off s.
+_HLL_REG_SQL = f"""h AS (
         SELECT event_type,
                ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
                    ::BIGINT AS hv
@@ -475,7 +479,73 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
                CAST(COUNT(*) AS BIGINT) AS hit,
                SUM(CAST(1 << ({_HLL_WBITS + 1} - m) AS BIGINT)) AS isum
         FROM reg GROUP BY event_type
-    ),
+    )"""
+
+
+def _hll_registers(events: DataFrame) -> DataFrame:
+    """(event_type, j, m): each event_type's register j holds the max
+    rank m over its non-null user_ids. Registers merge by MAX, so the
+    same table is a batch aggregate or a stream's only state."""
+    wb, m = _HLL_WBITS, _HLL_M
+    h = events.select(
+        "event_type",
+        F.conv(
+            F.substring(
+                F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8
+            ),
+            16,
+            10,
+        ).cast("long").alias("hv"),
+    )
+    pos = F.expr(
+        f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')"
+    )
+    r = h.select(
+        "event_type",
+        (F.col("hv") % m).alias("j"),
+        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
+    )
+    return r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
+
+
+def _hll_estimate(reg: DataFrame) -> DataFrame:
+    """(event_type, registers_hit, zero_regs, e) from the register
+    table: the raw estimate from the scaled-integer register sum, with
+    the linear-counting small-range correction; e is unrounded."""
+    wb, m = _HLL_WBITS, _HLL_M
+    s = reg.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("hit"),
+        F.sum(
+            F.expr(f"CAST(shiftleft(1L, {wb + 1} - m) AS BIGINT)")
+        ).alias("isum"),
+    )
+    scale = 1 << (wb + 1)
+    e_raw = (
+        F.lit(_HLL_ALPHA * m * m * float(scale))
+        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
+    )
+    est = s.select(
+        "event_type",
+        "hit",
+        (F.lit(m) - F.col("hit")).cast("long").alias("zero_regs"),
+        e_raw.alias("e_raw"),
+    )
+    e = F.when(
+        (F.col("e_raw") <= 2.5 * m) & (F.col("zero_regs") > 0),
+        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / F.col("zero_regs")),
+    ).otherwise(F.col("e_raw"))
+    return est.select(
+        "event_type",
+        F.col("hit").alias("registers_hit"),
+        "zero_regs",
+        e.alias("e"),
+    )
+
+
+@register(
+    "agg_hll_portable",
+    oracle=f"""
+    WITH {_HLL_REG_SQL},
     ex AS (SELECT event_type,
                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct
            FROM events WHERE user_id IS NOT NULL GROUP BY event_type),
@@ -525,55 +595,9 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    wb, m = _HLL_WBITS, _HLL_M
-    h = ev.select(
-        "event_type",
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long").alias("hv"),
-    )
-    pos = F.expr(
-        f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')"
-    )
-    r = h.select(
-        "event_type",
-        (F.col("hv") % m).alias("j"),
-        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
-    )
-    reg = r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
-    s = reg.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(1L, {wb + 1} - m) AS BIGINT)")
-        ).alias("isum"),
-    )
+    fin = _hll_estimate(_hll_registers(ev))
     ex = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
-    )
-    scale = 1 << (wb + 1)
-    e_raw = (
-        F.lit(_HLL_ALPHA * m * m * float(scale))
-        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
-    )
-    est = s.select(
-        "event_type",
-        "hit",
-        (F.lit(m) - F.col("hit")).cast("long").alias("zero_regs"),
-        e_raw.alias("e_raw"),
-    )
-    e = F.when(
-        (F.col("e_raw") <= 2.5 * m) & (F.col("zero_regs") > 0),
-        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / F.col("zero_regs")),
-    ).otherwise(F.col("e_raw"))
-    fin = est.select(
-        "event_type",
-        F.col("hit").alias("registers_hit"),
-        "zero_regs",
-        e.alias("e"),
     )
     return fin.join(ex, "event_type").select(
         "event_type",

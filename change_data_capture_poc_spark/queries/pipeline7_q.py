@@ -109,26 +109,89 @@ def _cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
     )
 
 
-@register(
-    "agg_cms_portable",
-    oracle=f"""
-    WITH tok AS (
+def _cms_bucket_duck(word_expr: str) -> str:
+    """DuckDB bucket index of ``word_expr`` in hash row ``r.j``."""
+    return _cms_bucket_sql(0, word_expr, "duck").replace(
+        "'0:'", "CAST(r.j AS VARCHAR) || ':'"
+    )
+
+
+# The register table (reg: one count per (row j, bucket b)) and the
+# exact per-word counts (ex) as DuckDB CTEs, shared by agg_cms_portable
+# and its stream twin streaming_cms_register_drain.
+_CMS_REG_SQL = f"""tok AS (
         SELECT unnest(string_split(text, ' ')) AS word FROM documents
     ),
     t AS (SELECT word FROM tok WHERE word != ''),
     reg AS (
-        SELECT r.j, {_cms_bucket_sql(0, 'word', 'duck')
-                     .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b,
+        SELECT r.j, {_cms_bucket_duck('word')} AS b,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM t, (SELECT unnest(range({_CMS_D})) AS j) r
         GROUP BY r.j, b
     ),
     ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
-           FROM t GROUP BY word),
+           FROM t GROUP BY word)"""
+
+
+def _cms_tokens(docs: DataFrame) -> DataFrame:
+    """Every non-empty space-split token of ``docs.text``, as ``word``."""
+    return docs.select(F.explode(F.split("text", " ")).alias("word")).where(
+        F.col("word") != ""
+    )
+
+
+def _cms_cells():
+    """One (j, b) struct per hash row j: the token's bucket b in row j."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("j"),
+                    F.expr(_cms_bucket_sql(j, "word", "spark")).alias("b"),
+                )
+                for j in range(_CMS_D)
+            ]
+        )
+    )
+
+
+def _cms_registers(tokens: DataFrame) -> DataFrame:
+    """(j, b, cnt): one count per register. Registers merge by SUM, so
+    the same table is a batch aggregate or a stream's only state."""
+    return (
+        tokens.select(_cms_cells().alias("jb"))
+        .select("jb.j", "jb.b")
+        .groupBy("j", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+def _cms_estimates(tokens: DataFrame, reg: DataFrame) -> DataFrame:
+    """(word, exact_count, cms_estimate): each word's estimate is the
+    MIN of its registers' counts."""
+    ex = tokens.groupBy("word").agg(
+        F.count(F.lit(1)).cast("long").alias("exact_count")
+    )
+    wb = ex.select(
+        "word",
+        "exact_count",
+        _cms_cells().alias("jb"),
+    ).select("word", "exact_count", "jb.j", "jb.b")
+    return (
+        # bounded: CMS register grid, _CMS_D x _CMS_W rows
+        wb.join(F.broadcast(reg), ["j", "b"])
+        .groupBy("word", "exact_count")
+        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
+    )
+
+
+@register(
+    "agg_cms_portable",
+    oracle=f"""
+    WITH {_CMS_REG_SQL},
     wb AS (
         SELECT ex.word, ex.exact_count, r.j,
-               {_cms_bucket_sql(0, 'ex.word', 'duck')
-                .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b
+               {_cms_bucket_duck('ex.word')} AS b
         FROM ex, (SELECT unnest(range({_CMS_D})) AS j) r
     )
     SELECT wb.word, wb.exact_count,
@@ -156,43 +219,8 @@ def _cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
         f"{_CMS_D * _CMS_W}-row register table onto the vocab frame.",
 )
 def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    t = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-    )
-    # Registers: one (row, bucket) count per token per hash row.
-    jb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.expr(_cms_bucket_sql(j, "word", "spark")).alias("b"),
-                )
-                for j in range(_CMS_D)
-            ]
-        )
-    )
-    reg = (
-        t.select(jb.alias("jb"))
-        .select("jb.j", "jb.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    ex = t.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_count")
-    )
-    wb = ex.select(
-        "word",
-        "exact_count",
-        jb.alias("jb"),
-    ).select("word", "exact_count", "jb.j", "jb.b")
-    est = (
-        # bounded: CMS register grid, _CMS_D x _CMS_W rows
-        wb.join(F.broadcast(reg), ["j", "b"])
-        .groupBy("word", "exact_count")
-        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
-    )
+    t = _cms_tokens(load_table(spark, sf_dir, "documents"))
+    est = _cms_estimates(t, _cms_registers(t))
     return est.select(
         "word",
         "exact_count",

@@ -59,7 +59,10 @@ from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.registry import register
-from change_data_capture_poc_spark.sources.tables import load_table
+from change_data_capture_poc_spark.sources.tables import (
+    EMBEDDING_DIM,
+    load_table,
+)
 from change_data_capture_poc_spark.queries.pipeline7_q import (
     _BPE_ROUNDS,
     _bpe_rounds_cte,
@@ -278,14 +281,13 @@ def ann_multiprobe_recall_sampled_truth(
     )
 
     # Index side: per-label centroids over the FULL corpus — one
-    # map-side-partial shuffle (64 per-dimension avg columns, the
+    # map-side-partial shuffle (one avg column per dimension, the
     # oracle's own formulation) instead of the posexplode regroup
-    # (n x 64 rows, two shuffles): the centroid pass is this gate's
+    # (n x dim rows, two shuffles): the centroid pass is this gate's
     # only corpus-sized job, so its constant sets the 8x ratio.
-    dim = 64
     cent = e.groupBy("label").agg(
         F.array(
-            *[F.avg(F.col("v")[i]) for i in range(dim)]
+            *[F.avg(F.col("v")[i]) for i in range(EMBEDDING_DIM)]
         ).alias("c")
     )
     cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
@@ -390,7 +392,7 @@ def _source_fingerprint(sf_dir: str, table: str) -> list[int]:
 
 
 def _ann_index_dir(sf_dir: str) -> str:
-    """Per-SF index home (same /tmp device as streaming_q._stream_dir
+    """Per-SF index home (same /tmp device as sources.tables.stream_dir
     — in production this is the object-store prefix the offline build
     job owns and the online servers mount read-only)."""
     from change_data_capture_poc_spark.functions.artifacts import (

@@ -13,102 +13,43 @@ Determinism rules for streamed results:
 - aggregations drain in ``complete`` mode so no window is withheld by
   a watermark at end-of-stream.
 
-``events.parquet`` has shipped as both TIMESTAMP(NANOS) and plain µs
-TIMESTAMP across data generations: the streaming reader needs the same
-encoding branch as the batch catalog (sources/tables.load_table),
-mirrored here with an explicit schema (file streams require one) chosen
-by peeking the batch-read schema once.
+Each drain reads its table through ``sources.tables.stream_table``,
+the streaming twin of ``load_table`` (same schema, same ``events.ts``
+conversion), and runs its batch twin's operator on the stream; the
+drain itself adds only ``_drain``. Query modules register their
+queries when imported, and the registry's order is the order
+``__spark_entry__.queries()`` and ``oracle_sql()`` list, so an import
+of a batch twin's module sits where that module was first imported,
+just before the drain that needs it.
 """
 
 from __future__ import annotations
 
+import os
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.registry import register
+from change_data_capture_poc_spark.cdc.net_effect import (
+    NET_EFFECT_SQL,
+    event_ops,
+    net_effect_changes,
+    net_effect_state,
+)
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
-
-_EVENTS_RAW_SCHEMA_NANOS = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, "
-    "value double, props string"
+from change_data_capture_poc_spark.registry import register
+from change_data_capture_poc_spark.sources.tables import (
+    load_table,
+    stream_dir,
+    stream_table,
+    stream_table_from,
 )
-_EVENTS_RAW_SCHEMA_MICROS = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, "
-    "event_type string, value double, props string"
-)
+from change_data_capture_poc_spark.streaming.dedup import dedup_stream
+from change_data_capture_poc_spark.streaming.joins import interval_join_streams
+from change_data_capture_poc_spark.streaming.sessions import session_window_agg
 
-
-def _stream_dir(sf_dir: str, table: str, suffix: str = "") -> str:
-    """The file stream source only accepts DIRECTORIES (it watches them
-    for new files); each testdata table is a single parquet file, so
-    expose it through a per-(SF, table) symlink directory under /tmp —
-    zero copy, and exactly how a production stream would watch a
-    landing directory. Shared by the events/embeddings/documents
-    streams (suffix keeps their historical directory names). A
-    dangling symlink left by a deleted sf_dir is replaced, not
-    silently kept."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(f"{sf_dir}{suffix}".encode()).hexdigest()[:10]
-    d = f"/tmp/spark_graft_stream{suffix.replace('/', '_')}_{key}"
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{table}.parquet")
-    if os.path.lexists(link) and not os.path.exists(link):
-        os.remove(link)
-    if not os.path.lexists(link):
-        os.symlink(os.path.join(sf_dir, f"{table}.parquet"), link)
-    return d
-
-
-def _events_stream_dir(sf_dir: str) -> str:
-    return _stream_dir(sf_dir, "events")
-
-
-def _events_encoding_is_nanos(spark: SparkSession, sf_dir: str) -> bool:
-    # Peek the physical encoding with a schema-only batch read (no
-    # scan), scoping the legacy nanosAsLong flag to the peek (set +
-    # restore, same discipline as sources/tables.load_table) — a bare
-    # session-wide set here would silently change how every later
-    # parquet read in the session handles TIMESTAMP(NANOS). The stream
-    # itself needs no flag: it gets an EXPLICIT schema.
-    try:
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-    except Exception:
-        prior = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        peek = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-    return peek.get("ts") == "bigint"
-
-
-def _events_stream_from_dir(
-    spark: SparkSession, stream_dir: str, nanos: bool
-) -> DataFrame:
-    schema = _EVENTS_RAW_SCHEMA_NANOS if nanos else _EVENTS_RAW_SCHEMA_MICROS
-    raw = spark.readStream.schema(schema).parquet(stream_dir)
-    if nanos:
-        raw = raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nanos = _events_encoding_is_nanos(spark, sf_dir)
-    return _events_stream_from_dir(
-        spark, _events_stream_dir(sf_dir), nanos
-    )
-
-
-_SENTINEL_TS_S = 4_102_444_800  # 2100-01-01 UTC — past any test event
+_SENTINEL_TS = datetime(2100, 1, 1)  # UTC, past any test event
 
 
 def _stream_events_with_sentinel(
@@ -122,36 +63,28 @@ def _stream_events_with_sentinel(
     availableNow drain terminates. Production equivalent: the source
     keeps flowing, so the watermark keeps advancing on its own — the
     sentinel replays that property on a bounded replay. Sentinel rows
-    are filtered out of the query output by their negative ids."""
-    import os
-
+    are filtered out of the query output by their negative ids. The
+    sentinel file is written in the events file's own physical schema,
+    so it follows whichever ``ts`` encoding the data generation has."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    nanos = _events_encoding_is_nanos(spark, sf_dir)
-    d = _stream_dir(sf_dir, "events", "/outerj")
+    src = stream_dir(sf_dir, "events")
+    d = f"{src}_sentinel"
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, "events.parquet")
+    if not os.path.lexists(link):
+        os.symlink(os.path.join(src, "events.parquet"), link)
+    schema = pq.read_schema(link).remove_metadata()
     sentinel = os.path.join(d, "z_sentinel.parquet")
-    if not os.path.exists(sentinel):
-        if nanos:
-            ts_arr = pa.array(
-                [_SENTINEL_TS_S * 10**9] * 2, type=pa.int64()
-            )
-        else:
-            ts_arr = pa.array(
-                [_SENTINEL_TS_S * 10**6] * 2, type=pa.timestamp("us")
-            )
-        tbl = pa.table(
-            {
-                "event_id": pa.array([-1, -1], type=pa.int64()),
-                "ts": ts_arr,
-                "user_id": pa.array([-1, -1], type=pa.int64()),
-                "event_type": pa.array(["purchase", "signup"]),
-                "value": pa.array([None, None], type=pa.float64()),
-                "props": pa.array([None, None], type=pa.string()),
-            }
-        )
-        pq.write_table(tbl, sentinel)
-    return _events_stream_from_dir(spark, d, nanos)
+    if (
+        not os.path.exists(sentinel)
+        or pq.read_schema(sentinel).remove_metadata() != schema
+    ):
+        row = {"event_id": -1, "ts": _SENTINEL_TS, "user_id": -1}
+        rows = [{**row, "event_type": t} for t in ("purchase", "signup")]
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), sentinel)
+    return stream_table_from(spark, sf_dir, "events", d)
 
 
 # State partition count scoped around every drain's start() call.
@@ -230,9 +163,7 @@ def _drain(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
         "checks the streaming state machinery exactly.",
 )
 def streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.streaming.dedup import dedup_stream
-
-    ev = _stream_events(spark, sf_dir).select("user_id")
+    ev = stream_table(spark, sf_dir, "events").select("user_id")
     out = dedup_stream(ev, ["user_id"])
     return _drain(out, "streaming_dedup_drain_tbl", "append")
 
@@ -256,7 +187,7 @@ def streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_hourly_rollup_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = _stream_events(spark, sf_dir).select("ts", "value")
+    ev = stream_table(spark, sf_dir, "events").select("ts", "value")
     agg = ev.groupBy(F.window("ts", "1 hour")).agg(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("value_sum"),
@@ -298,20 +229,15 @@ def streaming_hourly_rollup_drain(
 def streaming_session_window_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = _stream_events(spark, sf_dir).select("user_id", "ts", "value")
-    agg = ev.groupBy(
-        F.session_window("ts", "30 minutes"), F.col("user_id")
-    ).agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.round(F.sum("value"), 6).alias("value_sum"),
-    )
-    out = agg.select(
+    ev = stream_table(spark, sf_dir, "events").select("user_id", "ts", "value")
+    out = session_window_agg(ev, key="user_id", ts="ts", gap="30 minutes")
+    drained = _drain(out, "streaming_session_window_tbl", "complete")
+    return drained.select(
         "user_id",
-        F.col("session_window.start").alias("session_start"),
+        "session_start",
         "n_events",
-        "value_sum",
+        F.round("value_sum", 6).alias("value_sum"),
     )
-    return _drain(out, "streaming_session_window_tbl", "complete")
 
 
 @register(
@@ -336,9 +262,8 @@ def streaming_session_window_drain(
 def streaming_enrich_join_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.sources.tables import load_table
 
-    ev = _stream_events(spark, sf_dir).select("user_id", "value")
+    ev = stream_table(spark, sf_dir, "events").select("user_id", "value")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -382,7 +307,7 @@ def streaming_enrich_join_drain(
 def streaming_hopping_rollup_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = _stream_events(spark, sf_dir).select("ts", "value")
+    ev = stream_table(spark, sf_dir, "events").select("ts", "value")
     agg = ev.groupBy(F.window("ts", "1 hour", "30 minutes")).agg(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("value_sum"),
@@ -395,34 +320,7 @@ def streaming_hopping_rollup_drain(
 
 @register(
     "streaming_net_effect_drain",
-    oracle="""
-    WITH ops AS (
-        SELECT user_id, event_id, value,
-               CASE event_type WHEN 'signup' THEN 'c'
-                               WHEN 'error'  THEN 'd'
-                               ELSE 'u' END AS op
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    agg AS (
-        SELECT user_id,
-               arg_min(op, event_id)    AS first_op,
-               arg_max(op, event_id)    AS last_op,
-               arg_max(value, event_id) AS last_value,
-               max(event_id)            AS last_event_id,
-               count(*)                 AS n_ops
-        FROM ops GROUP BY user_id
-    )
-    SELECT user_id,
-           CASE WHEN last_op = 'd' THEN 'd'
-                WHEN first_op = 'c' THEN 'c'
-                ELSE 'u' END AS net_op,
-           CASE WHEN last_op = 'd' THEN NULL
-                ELSE ROUND(last_value + 1e-9, 6) END AS net_value,
-           last_event_id,
-           CAST(n_ops AS BIGINT) AS n_ops
-    FROM agg
-    WHERE NOT (first_op = 'c' AND last_op = 'd')
-    """,
+    oracle=NET_EFFECT_SQL,
     doc="Net-effect CDC compaction executed AS A STREAM: the running "
         "min_by/max_by state per key consolidates every arriving "
         "change, so at any drain point the sink holds exactly one net "
@@ -433,38 +331,9 @@ def streaming_hopping_rollup_drain(
         "classification applied to the drained table.",
 )
 def streaming_net_effect_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _stream_events(spark, sf_dir).where(F.col("user_id").isNotNull())
-    ops = ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
-    )
-    agg = ops.groupBy("user_id").agg(
-        F.min_by("op", "event_id").alias("first_op"),
-        F.max_by("op", "event_id").alias("last_op"),
-        F.max_by("value", "event_id").alias("last_value"),
-        F.max("event_id").alias("last_event_id"),
-        F.count(F.lit(1)).alias("n_ops"),
-    )
-    drained = _drain(agg, "streaming_net_effect_tbl", "complete")
-    return drained.where(
-        ~((F.col("first_op") == "c") & (F.col("last_op") == "d"))
-    ).select(
-        "user_id",
-        F.when(F.col("last_op") == "d", F.lit("d"))
-        .when(F.col("first_op") == "c", F.lit("c"))
-        .otherwise(F.lit("u"))
-        .alias("net_op"),
-        F.when(F.col("last_op") == "d", F.lit(None).cast("double"))
-        .otherwise(F.round(F.col("last_value") + F.lit(1e-9), 6))
-        .alias("net_value"),
-        "last_event_id",
-        "n_ops",
-    )
+    state = net_effect_state(event_ops(stream_table(spark, sf_dir, "events")))
+    drained = _drain(state, "streaming_net_effect_tbl", "complete")
+    return net_effect_changes(drained)
 
 
 @register(
@@ -496,7 +365,9 @@ def streaming_stateful_running_agg_drain(
         running_user_totals,
     )
 
-    ev = _stream_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").where(
+        F.col("user_id").isNotNull()
+    )
     out = running_user_totals(ev.select("user_id", "ts", "value"))
     drained = _drain(out, "streaming_stateful_running_tbl", "update")
     return drained.groupBy("user_id").agg(
@@ -505,6 +376,55 @@ def streaming_stateful_running_agg_drain(
             F.max_by("value_sum", "n") + F.lit(1e-9), 6
         ).alias("value_sum"),
         F.unix_millis(F.max_by("last_ts", "n")).alias("last_ts_ms"),
+    )
+
+
+def _purchase_signup_join(events: DataFrame, how: str) -> DataFrame:
+    """Each keyed purchase joined to the same user's keyed signups in
+    the 2 h up to it, through streaming/joins.interval_join_streams:
+    (p_event_id, s_event_id, user_id, delta_s). Keyless signups are
+    left out: they can match nothing, and a full outer join would
+    emit them unmatched, which the oracle's keyed signup side does
+    not. Both sides shuffle once on user_id and buffer in watermarked
+    state, evicted once the watermark passes ts + upper."""
+    keyed = events.where(F.col("user_id").isNotNull())
+    p = keyed.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("event_id").alias("p_event_id"),
+        F.col("ts").alias("p_ts"),
+    )
+    s = keyed.where(F.col("event_type") == "signup").select(
+        F.col("user_id").alias("s_user_id"),
+        F.col("event_id").alias("s_event_id"),
+        F.col("ts").alias("s_ts"),
+    )
+    return interval_join_streams(
+        p, s,
+        left_key="user_id", right_key="s_user_id",
+        left_ts="p_ts", right_ts="s_ts",
+        lower_seconds=7200, upper_seconds=0,
+        how=how,
+    ).select(
+        "p_event_id",
+        "s_event_id",
+        F.coalesce("user_id", "s_user_id").alias("user_id"),
+        ((F.unix_micros("p_ts") - F.unix_micros("s_ts")) / 1000000)
+        .cast("long")
+        .alias("delta_s"),
+    )
+
+
+def _without_sentinel(drained: DataFrame) -> DataFrame:
+    """Drop the sentinel rows, batch-side after the drain. Sentinel
+    rows join each other (same key, zero delta), so one (-1, -1) pair
+    emits; the test is null-safe, since a plain != would also drop
+    every NULL-padded row. Filtering on the stream instead would push
+    the filter below the EventTimeWatermark node, remove the sentinel
+    from watermark statistics, and stall the watermark 30 s short of
+    end-of-stream, withholding exactly the last unmatched rows."""
+    return drained.where(
+        ~F.col("p_event_id").eqNullSafe(F.lit(-1))
+        & ~F.col("s_event_id").eqNullSafe(F.lit(-1))
     )
 
 
@@ -535,38 +455,7 @@ def streaming_stateful_running_agg_drain(
 def streaming_interval_join_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
-    ev = _stream_events(spark, sf_dir)
-    p = ev.where(
-        (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
-    ).select(
-        "user_id",
-        F.col("event_id").alias("p_event_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    s = ev.where(
-        (F.col("event_type") == "signup") & F.col("user_id").isNotNull()
-    ).select(
-        F.col("user_id").alias("s_user_id"),
-        F.col("event_id").alias("s_event_id"),
-        F.col("ts").alias("s_ts"),
-    )
-    j = interval_join_streams(
-        p, s,
-        left_key="user_id", right_key="s_user_id",
-        left_ts="p_ts", right_ts="s_ts",
-        lower_seconds=7200, upper_seconds=0,
-    ).select(
-        "p_event_id",
-        "s_event_id",
-        "user_id",
-        ((F.unix_micros("p_ts") - F.unix_micros("s_ts")) / 1000000)
-        .cast("long")
-        .alias("delta_s"),
-    )
+    j = _purchase_signup_join(stream_table(spark, sf_dir, "events"), "inner")
     return _drain(j, "streaming_interval_join_tbl", "append")
 
 
@@ -601,46 +490,10 @@ def streaming_interval_join_drain(
 def streaming_interval_join_outer_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
     ev = _stream_events_with_sentinel(spark, sf_dir)
-    p = ev.where(
-        (F.col("event_type") == "purchase")
-        & (F.col("user_id").isNotNull())
-    ).select(
-        "user_id",
-        F.col("event_id").alias("p_event_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    s = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("s_user_id"),
-        F.col("event_id").alias("s_event_id"),
-        F.col("ts").alias("s_ts"),
-    )
-    j = interval_join_streams(
-        p, s,
-        left_key="user_id", right_key="s_user_id",
-        left_ts="p_ts", right_ts="s_ts",
-        lower_seconds=7200, upper_seconds=0,
-        how="left_outer",
-    ).select(
-        "p_event_id",
-        "s_event_id",
-        "user_id",
-        ((F.unix_micros("p_ts") - F.unix_micros("s_ts")) / 1000000)
-        .cast("long")
-        .alias("delta_s"),
-    )
-    # The sentinel is dropped AFTER the drain, batch-side: a stream-
-    # side p_event_id != -1 filter gets pushed below the left input's
-    # EventTimeWatermark node, which removes the sentinel from
-    # watermark statistics and stalls the left watermark 30 s short of
-    # end-of-stream — withholding exactly the last unmatched
-    # purchases' NULL rows.
-    return _drain(j, "streaming_interval_join_outer_tbl", "append").where(
-        F.col("p_event_id") != -1
+    j = _purchase_signup_join(ev, "left_outer")
+    return _without_sentinel(
+        _drain(j, "streaming_interval_join_outer_tbl", "append")
     )
 
 
@@ -677,53 +530,19 @@ def streaming_interval_join_outer_drain(
 def streaming_interval_join_full_outer_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
     ev = _stream_events_with_sentinel(spark, sf_dir)
-    p = ev.where(
-        (F.col("event_type") == "purchase")
-        & (F.col("user_id").isNotNull())
-    ).select(
-        "user_id",
-        F.col("event_id").alias("p_event_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    s = ev.where(
-        (F.col("event_type") == "signup")
-        & (F.col("user_id").isNotNull())
-    ).select(
-        F.col("user_id").alias("s_user_id"),
-        F.col("event_id").alias("s_event_id"),
-        F.col("ts").alias("s_ts"),
-    )
-    j = interval_join_streams(
-        p, s,
-        left_key="user_id", right_key="s_user_id",
-        left_ts="p_ts", right_ts="s_ts",
-        lower_seconds=7200, upper_seconds=0,
-        how="full_outer",
-    ).select(
-        "p_event_id",
-        "s_event_id",
-        F.coalesce("user_id", "s_user_id").alias("user_id"),
-        ((F.unix_micros("p_ts") - F.unix_micros("s_ts")) / 1000000)
-        .cast("long")
-        .alias("delta_s"),
-    )
-    # Sentinel rows join each other (same key, zero delta), so exactly
-    # one (-1, -1) pair emits; null-safe-drop it batch-side (a plain
-    # != would also drop every NULL-padded row).
-    drained = _drain(j, "streaming_interval_join_full_outer_tbl", "append")
-    return drained.where(
-        ~F.col("p_event_id").eqNullSafe(F.lit(-1))
-        & ~F.col("s_event_id").eqNullSafe(F.lit(-1))
+    j = _purchase_signup_join(ev, "full_outer")
+    return _without_sentinel(
+        _drain(j, "streaming_interval_join_full_outer_tbl", "append")
     )
 
 
-def _embeddings_stream_dir(sf_dir: str) -> str:
-    return _stream_dir(sf_dir, "embeddings", "/emb")
+def _double_vectors(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, v): each embedding as array<double>."""
+    return embeddings.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+    )
 
 
 @register(
@@ -757,28 +576,10 @@ def _embeddings_stream_dir(sf_dir: str) -> str:
 def streaming_centroid_assign_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.sources.tables import load_table
-
-    static = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    cents = static.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    # Peek the batch-read schema once (as _stream_events does for
-    # events.parquet) instead of hardcoding it: if embeddings ever
-    # ships a second physical encoding (double embeddings, bigint
-    # label), the stream tracks the batch path automatically.
-    emb_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .parquet(_embeddings_stream_dir(sf_dir))
-        .select(
-            "vec_id",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        )
-    )
+    cents = _double_vectors(
+        load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 8)
+    ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    stream = _double_vectors(stream_table(spark, sf_dir, "embeddings"))
     dist = F.round(
         F.expr(
             "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
@@ -805,10 +606,6 @@ def streaming_centroid_assign_drain(
         F.col("best.dist").alias("dist"),
     )
     return _drain(out, "streaming_centroid_assign_tbl", "complete")
-
-
-def _documents_stream_dir(sf_dir: str) -> str:
-    return _stream_dir(sf_dir, "documents", "/docs")
 
 
 def _minhash_band_oracle() -> str:
@@ -863,10 +660,7 @@ def streaming_minhash_band_drain(
         _spark_grams,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     bands = _spark_bands(_spark_grams(stream))
     agg = (
         bands.groupBy("band_id", "band_key")
@@ -879,21 +673,19 @@ def streaming_minhash_band_drain(
     return _drain(agg, "streaming_minhash_band_tbl", "complete")
 
 
-def _chunk_oracle() -> str:
-    # One oracle string, two execution engines: the streaming drain
-    # must produce the exact rows of the batch chunker (same pattern
-    # as _minhash_band_oracle above). The import is cycle-free —
-    # pipeline4_q depends only on registry + sources.
-    from change_data_capture_poc_spark.queries.pipeline4_q import (
-        _CHUNK_ORACLE,
-    )
-
-    return _CHUNK_ORACLE
+from change_data_capture_poc_spark.queries.pipeline4_q import (  # noqa: E402
+    _CHUNK_ORACLE,
+    _MG_ORACLE,
+    _mg_candidates,
+    _mg_heavy_hitters,
+    _mg_tokens,
+    chunk_sliding_window,
+)
 
 
 @register(
     "streaming_chunk_drain",
-    oracle=_chunk_oracle(),
+    oracle=_CHUNK_ORACLE,
     doc="STREAMING RAG chunking: documents arrive as a stream and the "
         "sliding-window chunker (pipeline3/4 chunk_sliding_window — "
         "pure map stage: split, closed-form chunk count, "
@@ -904,14 +696,7 @@ def _chunk_oracle() -> str:
         "must come out of the streaming engine).",
 )
 def streaming_chunk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline4_q import (
-        chunk_sliding_window,
-    )
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     out = chunk_sliding_window(stream.select("doc_id", "text"))
     return _drain(out, "streaming_chunk_tbl", "append")
 
@@ -973,35 +758,18 @@ def streaming_semdedup_assign_drain(
         dot_product,
         unit_normalize,
     )
-    from change_data_capture_poc_spark.sources.tables import load_table
 
-    static = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    seeds = collect_centroids(static, 8)
+    static = _double_vectors(load_table(spark, sf_dir, "embeddings"))
+    seeds = collect_centroids(static, 8, vec_col="v")
+    cid = centroid_argmin_expr(seeds, "v").getField("cid").alias("cid")
     # Batch index: assignment + normalized vector per existing member.
     index = static.select(
         F.col("vec_id").alias("b_vec_id"),
-        centroid_argmin_expr(seeds).getField("cid").alias("cid"),
-        unit_normalize(F.col("e")).alias("b_u"),
+        cid,
+        unit_normalize(F.col("v")).alias("b_u"),
     )
-
-    emb_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .parquet(_embeddings_stream_dir(sf_dir))
-        .select(
-            "vec_id",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias(
-                "e"
-            ),
-        )
-        .select(
-            "vec_id",
-            centroid_argmin_expr(seeds).getField("cid").alias("cid"),
-            unit_normalize(F.col("e")).alias("u"),
-        )
+    stream = _double_vectors(stream_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", cid, unit_normalize(F.col("v")).alias("u")
     )
     # Stream-static LEFT join keyed on the cluster id; the near-dup
     # test (lower-id member above threshold) lives in the join
@@ -1071,25 +839,11 @@ def _suffixgram_dup_oracle() -> str:
 def streaming_suffixgram_dup_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline6_q import _SS_K
+    from change_data_capture_poc_spark.queries.pipeline6_q import _ss_grams
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
-    grams = stream.select(
-        "doc_id", F.split("text", " ").alias("w")
-    ).where(F.size("w") >= _SS_K).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {_SS_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
-            )
-        ).alias("gram_hash"),
-    )
+    grams = _ss_grams(stream_table(spark, sf_dir, "documents"))
     agg = (
-        grams.groupBy("gram_hash")
+        grams.groupBy(F.col("gh").alias("gram_hash"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
             F.min("doc_id").cast("long").alias("earliest_doc"),
@@ -1103,33 +857,12 @@ def _hll_register_oracle() -> str:
     from change_data_capture_poc_spark.queries.pipeline6_q import (
         _HLL_ALPHA,
         _HLL_M,
+        _HLL_REG_SQL,
         _HLL_WBITS,
     )
 
     return f"""
-    WITH h AS (
-        SELECT event_type,
-               ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                   ::BIGINT AS hv
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type, hv % {_HLL_M} AS j,
-               CASE WHEN instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') = 0
-                    THEN {_HLL_WBITS + 1}
-                    ELSE instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') END AS rho
-        FROM h
-    ),
-    reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
-            GROUP BY event_type, j),
-    s AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS hit,
-               SUM(CAST(1 << ({_HLL_WBITS + 1} - m) AS BIGINT)) AS isum
-        FROM reg GROUP BY event_type
-    ),
+    WITH {_HLL_REG_SQL},
     est AS (
         SELECT event_type, hit,
                CAST({_HLL_M} - hit AS BIGINT) AS zero_regs,
@@ -1167,90 +900,37 @@ def streaming_hll_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_ALPHA,
-        _HLL_M,
-        _HLL_WBITS,
+        _hll_estimate,
+        _hll_registers,
     )
 
-    wb, m = _HLL_WBITS, _HLL_M
-    ev = _stream_events(spark, sf_dir).where(F.col("user_id").isNotNull())
-    h = ev.select(
-        "event_type",
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long").alias("hv"),
+    ev = stream_table(spark, sf_dir, "events").where(
+        F.col("user_id").isNotNull()
     )
-    pos = F.expr(f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')")
-    r = h.select(
-        "event_type",
-        (F.col("hv") % m).alias("j"),
-        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
+    regs = _drain(
+        _hll_registers(ev), "streaming_hll_register_tbl", "complete"
     )
-    reg_stream = r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
-    regs = _drain(reg_stream, "streaming_hll_register_tbl", "complete")
-
     # Batch readout over the drained registers (the stream's only
     # state); same scaled-integer arithmetic as agg_hll_portable.
-    s = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(1L, {wb + 1} - m) AS BIGINT)")
-        ).alias("isum"),
-    )
-    scale = 1 << (wb + 1)
-    e_raw = (
-        F.lit(_HLL_ALPHA * m * m * float(scale))
-        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
-    )
-    est = s.select(
-        "event_type",
-        F.col("hit").alias("registers_hit"),
-        (F.lit(m) - F.col("hit")).cast("long").alias("zero_regs"),
-        e_raw.alias("e_raw"),
-    )
-    e = F.when(
-        (F.col("e_raw") <= 2.5 * m) & (F.col("zero_regs") > 0),
-        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / F.col("zero_regs")),
-    ).otherwise(F.col("e_raw"))
-    return est.select(
+    return _hll_estimate(regs).select(
         "event_type",
         "registers_hit",
         "zero_regs",
-        F.round(e + F.lit(1e-9), 6).alias("hll_estimate"),
+        F.round(F.col("e") + F.lit(1e-9), 6).alias("hll_estimate"),
     )
 
 
 def _cms_oracle() -> str:
     from change_data_capture_poc_spark.queries.pipeline7_q import (
         _CMS_D,
-        _cms_bucket_sql,
+        _CMS_REG_SQL,
+        _cms_bucket_duck,
     )
 
-    bucket = _cms_bucket_sql(0, "word", "duck").replace(
-        "'0:'", "CAST(r.j AS VARCHAR) || ':'"
-    )
-    bucket_w = _cms_bucket_sql(0, "ex.word", "duck").replace(
-        "'0:'", "CAST(r.j AS VARCHAR) || ':'"
-    )
     return f"""
-    WITH tok AS (
-        SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    t AS (SELECT word FROM tok WHERE word != ''),
-    reg AS (
-        SELECT r.j, {bucket} AS b,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t, (SELECT unnest(range({_CMS_D})) AS j) r
-        GROUP BY r.j, b
-    ),
-    ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
-           FROM t GROUP BY word),
+    WITH {_CMS_REG_SQL},
     wb AS (
-        SELECT ex.word, r.j, {bucket_w} AS b
+        SELECT ex.word, r.j, {_cms_bucket_duck('ex.word')} AS b
         FROM ex, (SELECT unnest(range({_CMS_D})) AS j) r
     )
     SELECT wb.word, CAST(MIN(reg.cnt) AS BIGINT) AS cms_estimate
@@ -1279,69 +959,30 @@ def streaming_cms_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _cms_bucket_sql,
-        _CMS_D,
+        _cms_estimates,
+        _cms_registers,
+        _cms_tokens,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
+    stream = _cms_tokens(stream_table(spark, sf_dir, "documents"))
+    regs = _drain(
+        _cms_registers(stream), "streaming_cms_register_tbl", "complete"
     )
-    t = stream.select(
-        F.explode(F.split("text", " ")).alias("word")
-    ).where(F.col("word") != "")
-    jb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.expr(_cms_bucket_sql(j, "word", "spark")).alias("b"),
-                )
-                for j in range(_CMS_D)
-            ]
-        )
-    )
-    reg_stream = (
-        t.select(jb.alias("jb"))
-        .select("jb.j", "jb.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    regs = _drain(reg_stream, "streaming_cms_register_tbl", "complete")
-
     # Batch readout over the drained registers (the stream's only
     # state): per-word MIN over its buckets, same arithmetic as
     # agg_cms_portable.
-    from change_data_capture_poc_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    ex = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .drop("_n")
-    )
-    wb = ex.select("word", jb.alias("jb")).select("word", "jb.j", "jb.b")
-    return (
-        # bounded: constant sketch register grid
-        wb.join(F.broadcast(regs), ["j", "b"])
-        .groupBy("word")
-        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
-    )
+    toks = _cms_tokens(load_table(spark, sf_dir, "documents"))
+    return _cms_estimates(toks, regs).select("word", "cms_estimate")
 
 
-def _bloom_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _blm_oracle,
-    )
-
-    return _blm_oracle()
+from change_data_capture_poc_spark.queries.pipeline7_q import (  # noqa: E402
+    _blm_oracle,
+)
 
 
 @register(
     "streaming_bloom_bitset_drain",
-    oracle=_bloom_oracle(),
+    oracle=_blm_oracle(),
     doc="STREAMING Bloom membership sketch — dedup_bloom_portable's "
         "stream twin (completing the portable-sketch trio's stream "
         "pairings: HLL registers, CMS registers, Bloom bits): "
@@ -1365,12 +1006,8 @@ def streaming_bloom_bitset_drain(
         _blm_split_grams,
         _blm_split_hash,
     )
-    from change_data_capture_poc_spark.sources.tables import load_table
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     tr_grams = (
         stream.withColumn("h", _blm_split_hash())
         .where(F.col("h") < 80)
@@ -1441,10 +1078,7 @@ def streaming_weighted_reservoir_drain(
         weighted_reservoir,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     scored = stream.where(F.col("n_chars") > 0).select(
         "source", "doc_id", "n_chars", _wps_priority().alias("priority")
     )
@@ -1497,7 +1131,9 @@ def streaming_histogram_register_drain(
         _qsk_register_exprs,
     )
 
-    ev = _stream_events(spark, sf_dir).where(F.col("value").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").where(
+        F.col("value").isNotNull()
+    )
     bucket, clipped = _qsk_register_exprs()
     marked = ev.select("event_type", "value", bucket, clipped)
     reg_stream = marked.groupBy("event_type", "bucket").agg(
@@ -1525,17 +1161,15 @@ def streaming_histogram_register_drain(
     )
 
 
-def _quar_report_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _QUAR_REPORT_ORACLE,
-    )
-
-    return _QUAR_REPORT_ORACLE
+from change_data_capture_poc_spark.queries.pipeline9_q import (  # noqa: E402
+    _QUAR_REPORT_ORACLE,
+    ensure_quarantine_log,
+)
 
 
 @register(
     "streaming_quarantine_drain",
-    oracle=_quar_report_oracle(),
+    oracle=_QUAR_REPORT_ORACLE,
     doc="STREAMING parse-health dashboard — cdc_quarantine_report's "
         "stream twin (the production shape: the quarantine dashboard "
         "watches the landing directory live, it does not batch-scan "
@@ -1556,9 +1190,6 @@ def streaming_quarantine_drain(
     from pyspark.sql import types as T
 
     from change_data_capture_poc_spark.cdc.envelope import envelope_schema
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        ensure_quarantine_log,
-    )
 
     d = ensure_quarantine_log(spark, sf_dir)
     stream = (
@@ -1643,34 +1274,14 @@ def streaming_quarantine_drain(
 def streaming_dedup_ttl_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = (
-        _stream_events(spark, sf_dir)
-        .select("user_id", "ts")
-        .withWatermark("ts", "45 days")
-        .dropDuplicatesWithinWatermark(["user_id"])
-        .select("user_id")
-    )
-    return _drain(ev, "streaming_dedup_ttl_tbl", "append")
-
-
-def _mg_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline4_q import _MG_K
-
-    return f"""
-    WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    n AS (SELECT COUNT(*) AS n FROM toks)
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM toks, n
-    GROUP BY tok, n.n
-    HAVING COUNT(*) > n.n / {_MG_K}
-    """
+    ev = stream_table(spark, sf_dir, "events").select("user_id", "ts")
+    out = dedup_stream(ev, ["user_id"], "ts", "45 days").select("user_id")
+    return _drain(out, "streaming_dedup_ttl_tbl", "append")
 
 
 @register(
     "streaming_heavy_hitters_drain",
-    oracle=_mg_oracle(),
+    oracle=_MG_ORACLE,
     doc="STREAMING heavy hitters — text_heavy_hitters_misra_gries's "
         "stream twin: document tokens arrive as a stream; each "
         "micro-batch partition folds through a bounded Misra-Gries "
@@ -1690,66 +1301,16 @@ def _mg_oracle() -> str:
 def streaming_heavy_hitters_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
-    from change_data_capture_poc_spark.queries.pipeline4_q import _MG_K
-    from change_data_capture_poc_spark.sources.tables import load_table
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
-    # No empty-token filter: the batch twin (and its oracle) count
-    # every split token, so the candidate superset must too.
-    toks = stream.select(
-        F.explode(F.split("text", " ")).alias("tok")
-    )
-
-    def mg(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            for tok in pdf["tok"]:
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < _MG_K:
-                    counters[tok] = 1
-                else:
-                    dead = []
-                    for t in counters:
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            dead.append(t)
-                    for t in dead:
-                        del counters[t]
-        if counters:
-            yield pd.DataFrame({"tok": list(counters)})
-
     cand_stream = (
-        toks.mapInPandas(mg, "tok string")
+        _mg_candidates(_mg_tokens(stream_table(spark, sf_dir, "documents")))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("_hits"))
     )
     cand = _drain(
         cand_stream, "streaming_heavy_hitters_tbl", "complete"
     ).select("tok")
-
-    d = load_table(spark, sf_dir, "documents")
-    btoks = d.select(
-        F.explode(F.split("text", " ")).alias("tok")
-    )
-    n = btoks.agg(F.count("*").alias("n"))
-    exact = (
-        # bounded: Misra-Gries heavy hitters, counter-capacity-capped
-        btoks.join(F.broadcast(cand), "tok")
-        .groupBy("tok")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    return (
-        # bounded: 1-row token total
-        exact.crossJoin(F.broadcast(n))
-        .where(F.col("cnt") > F.col("n") / _MG_K)
-        .select("tok", "cnt")
-    )
+    toks = _mg_tokens(load_table(spark, sf_dir, "documents"))
+    return _mg_heavy_hitters(toks, cand)
 
 
 def _chunk_cdc_oracle() -> str:
@@ -1786,10 +1347,7 @@ def streaming_chunk_cdc_drain(
         _cdc_chunks_from,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     out = _cdc_chunks_from(
         stream.select("doc_id", "source", "text")
     ).select("doc_id", "chunk_idx", "n_words", "chunk_fp")
@@ -1840,10 +1398,7 @@ def streaming_url_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _raw_url_col,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     canon = stream.select(
         "doc_id",
         _canonical_url_col(_raw_url_col()).alias("canonical_url"),

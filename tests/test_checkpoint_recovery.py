@@ -11,8 +11,14 @@ query mid-stream and restart it from the same checkpoint:
 
 The SCD2 materializer additionally exercises foreachBatch replay: a
 crash between the log write and the offset commit re-runs the whole
-batch, so the (batch_id, bucket)-partitioned dynamic-overwrite log
-write must absorb the replay instead of appending duplicates.
+batch. The replay finds its ``log_path/batch_id=N`` partition already
+there and replaces it, so the log gains no duplicates, and the rebuild
+of the touched SCD2 buckets leaves out stored versions carrying that
+``batch_id``, so the table gains none either.
+
+The net-effect state is built with ``cdc.net_effect.net_effect_state``,
+the operator ``streaming_net_effect_drain`` and
+``cdc_net_effect_compaction`` both run.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ from change_data_capture_poc_spark.cdc.envelope import (
     decode_envelope,
 )
 from change_data_capture_poc_spark.cdc.generator import CdcGenerator
+from change_data_capture_poc_spark.cdc.net_effect import net_effect_state
 from change_data_capture_poc_spark.cdc.scd2 import scd2_recompute
 from change_data_capture_poc_spark.streaming import (
     run_incremental_scd2,
@@ -123,13 +130,7 @@ def test_update_mode_agg_recovers_state_and_offsets(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(src)
         )
-        return ev.groupBy("user_id").agg(
-            F.min_by("op", "event_id").alias("first_op"),
-            F.max_by("op", "event_id").alias("last_op"),
-            F.max_by("value", "event_id").alias("last_value"),
-            F.max("event_id").alias("last_event_id"),
-            F.count(F.lit(1)).alias("n_ops"),
-        )
+        return net_effect_state(ev)
 
     # The memory sink refuses checkpoint recovery; foreachBatch is the
     # recoverable sink (same as the SCD2 materializer) — collect each
@@ -172,13 +173,7 @@ def test_update_mode_agg_recovers_state_and_offsets(spark, tmp_path):
         F.max_by("last_event_id", "n_ops").alias("last_event_id"),
         F.max("n_ops").alias("n_ops"),
     )
-    want = df.groupBy("user_id").agg(
-        F.min_by("op", "event_id").alias("first_op"),
-        F.max_by("op", "event_id").alias("last_op"),
-        F.max_by("value", "event_id").alias("last_value"),
-        F.max("event_id").alias("last_event_id"),
-        F.count(F.lit(1)).alias("n_ops"),
-    )
+    want = net_effect_state(df)
     assert sorted(map(tuple, final.collect())) == sorted(
         map(tuple, want.collect())
     )

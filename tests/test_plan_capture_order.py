@@ -26,21 +26,27 @@ def _git(repo, *args, when=None):
 
 
 def test_flagged_pair_is_not_also_warned(tmp_path):
-    _git(tmp_path, "init", "-q")
     # The after capture lands first, then a "before" that differs only
-    # in expression ids: the pair is out of order and 100% similar.
-    for name, when, expr_id in (("q_after.txt", 1_700_000_000, 1),
-                                ("q_before.txt", 1_700_000_600, 7)):
-        (tmp_path / name).write_text(
-            f"Project [id#{expr_id}]\n+- Scan parquet [id#{expr_id}]\n")
-        _git(tmp_path, "add", name)
-        _git(tmp_path, "commit", "-q", "-m", name, when=when)
+    # in expression ids (7 vs 1), or not at all (1 vs 1): either pair is
+    # out of order and 100% similar. The byte-identical one is the case
+    # `git log --follow` misdated by the after file's add.
+    for before_id in (7, 1):
+        repo = tmp_path / f"before_id_{before_id}"
+        repo.mkdir()
+        _git(repo, "init", "-q")
+        for name, when, expr_id in (("q_after.txt", 1_700_000_000, 1),
+                                    ("q_before.txt", 1_700_000_600,
+                                     before_id)):
+            (repo / name).write_text(
+                f"Project [id#{expr_id}]\n+- Scan parquet [id#{expr_id}]\n")
+            _git(repo, "add", name)
+            _git(repo, "commit", "-q", "-m", name, when=when)
 
-    run = subprocess.run(
-        [sys.executable, _TOOL, str(tmp_path)],
-        capture_output=True, text=True,
-    )
-    lines = run.stdout.splitlines()
-    assert run.returncode == 1
-    assert [ln.split()[0] for ln in lines] == ["FLAG", "FAIL:"]
-    assert lines[0].startswith("FLAG  q: before added 600s AFTER")
+        run = subprocess.run(
+            [sys.executable, _TOOL, str(repo)],
+            capture_output=True, text=True,
+        )
+        lines = run.stdout.splitlines()
+        assert run.returncode == 1, (before_id, run.stdout)
+        assert [ln.split()[0] for ln in lines] == ["FLAG", "FAIL:"]
+        assert lines[0].startswith("FLAG  q: before added 600s AFTER")

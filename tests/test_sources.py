@@ -9,6 +9,9 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+
+import pytest
 
 from change_data_capture_poc_spark.cdc.envelope import (
     PRODUCT_FIELDS,
@@ -475,3 +478,74 @@ def test_jdbc_snapshot_option_wiring(spark, monkeypatch):
     assert calls["options"]["lowerBound"] == 100
     assert calls["options"]["upperBound"] == 5000
     assert calls["options"]["numPartitions"] == 32
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_events_stream_twin_matches_load_table(spark, tmp_path, unit):
+    """Both physical ``events.ts`` encodings: TIMESTAMP(NANOS), read as
+    raw nanos and truncated to µs, and plain µs TIMESTAMP. The stream
+    source and ``load_table`` give the same schema and rows, and the
+    scoped ``nanosAsLong`` flag is back to its prior value after each."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from change_data_capture_poc_spark.sources.tables import (
+        load_table,
+        stream_dir,
+        stream_table,
+    )
+
+    ts_ns = [1_704_067_200_123_456_789, 1_704_198_600_000_001_000]
+    per_unit = {"ns": 1, "us": 1000}[unit]
+    sf = tmp_path / f"sf_{unit}"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(
+                    [t // per_unit for t in ts_ns], pa.timestamp(unit)
+                ),
+                "user_id": pa.array([10, None], pa.int64()),
+                "event_type": ["signup", "error"],
+                "value": pa.array([1.5, None], pa.float64()),
+                "props": ['{"a": 1}', None],
+            }
+        ),
+        sf / "events.parquet",
+    )
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(flag, None)
+
+    batch = load_table(spark, str(sf), "events")
+    assert spark.conf.get(flag, None) == prior
+    stream = stream_table(spark, str(sf), "events")
+    assert spark.conf.get(flag, None) == prior
+    assert stream.isStreaming
+    assert stream.schema == batch.schema
+    assert dict(batch.dtypes)["ts"] == "timestamp"
+
+    name = f"events_stream_twin_{unit}"
+    try:
+        q = (
+            stream.writeStream.format("memory").queryName(name)
+            .trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(120)
+        q.stop()
+    finally:
+        shutil.rmtree(stream_dir(str(sf), "events"), ignore_errors=True)
+    assert spark.conf.get(flag, None) == prior
+
+    def rows(df):
+        return sorted(
+            map(tuple, df.withColumn("ts", F.unix_micros("ts")).collect())
+        )
+
+    want = [
+        (1, ts_ns[0] // 1000, 10, "signup", 1.5, '{"a": 1}'),
+        (2, ts_ns[1] // 1000, None, "error", None, None),
+    ]
+    assert rows(batch) == want
+    assert rows(spark.table(name)) == want

@@ -37,11 +37,13 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _first_add_time(path: str) -> int | None:
     """Unix time of the commit that first ADDED path (None: untracked),
-    asked of the repository that holds path."""
+    asked of the repository that holds path. No ``--follow``: captures
+    are never renamed, and its rename detection dates a before capture
+    byte-identical to its after capture by the after file's add."""
     out = subprocess.run(
         [
             "git", "-C", os.path.dirname(os.path.abspath(path)), "log",
-            "--follow", "--diff-filter=A", "--format=%ct", "--",
+            "--diff-filter=A", "--format=%ct", "--",
             os.path.basename(path),
         ],
         capture_output=True,

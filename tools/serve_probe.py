@@ -18,9 +18,8 @@ serving cost — this tool measures them for real:
   loader builds the artifacts from the N-times self-unioned corpus,
   and the serve query (whose delta/request inputs are also scaled by
   the same loader) is timed against THOSE. This run's artifact dirs
-  are removed afterwards (snapshot diff of /tmp/spark_graft_* —
-  assumes no concurrent artifact-building harness, the repo's
-  standing no-concurrent-sweeps rule).
+  are removed afterwards, namespace by namespace, so a concurrent
+  run's artifacts stay.
 
 The ratio is therefore serve-vs-serve on honest 1x/Nx artifacts. The
 warm columns record the one-time build+serve pass for context (the
@@ -33,14 +32,15 @@ Usage: PYTHONPATH=/root/repo python tools/serve_probe.py [sf_dir] [N] [names...]
 from __future__ import annotations
 
 import datetime as _dt
-import glob
 import os
 import re
-import shutil
 import sys
 import time
 
 import change_data_capture_poc_spark.queries  # noqa: F401 - registers all
+from change_data_capture_poc_spark.functions.artifacts import (
+    remove_namespace_dirs,
+)
 from change_data_capture_poc_spark.registry import all_queries
 from change_data_capture_poc_spark.session import get_spark
 from change_data_capture_poc_spark.sources import tables as tables_mod
@@ -112,19 +112,15 @@ def run(
     # every run after the first record serve-only cost in the 'warm'
     # (build+serve) column — falsifying the offline-build readout the
     # column exists for (round-12 review finding). The pid nonce
-    # guarantees fresh builds; the snapshot diff below removes this
-    # run's artifacts afterwards so reruns neither reuse nor leak.
+    # guarantees fresh builds; the finally block removes this run's
+    # two namespaces afterwards so reruns neither reuse nor leak.
     nonce = os.getpid()
-    pre_dirs = set(glob.glob("/tmp/spark_graft_*"))
+    namespaces = (f"serveprobe1x{nonce}", f"serveprobe{n}x{nonce}")
     rows = []
     try:
         for name in names:
-            w1, base, base_b = phase(
-                f"serveprobe1x{nonce}", real_load, name
-            )
-            wn, scaled, scaled_b = phase(
-                f"serveprobe{n}x{nonce}", scaled_load, name
-            )
+            w1, base, base_b = phase(namespaces[0], real_load, name)
+            wn, scaled, scaled_b = phase(namespaces[1], scaled_load, name)
             ratio = scaled / base if base > 0 else float("nan")
             rows.append(
                 (name, round(base, 2), round(scaled, 2), round(ratio, 1),
@@ -141,8 +137,8 @@ def run(
         else:
             os.environ["SPARK_GRAFT_TMP_NS"] = prior_ns
         set_loader(mods, real_load)
-        for d in set(glob.glob("/tmp/spark_graft_*")) - pre_dirs:
-            shutil.rmtree(d, ignore_errors=True)
+        for ns in namespaces:
+            remove_namespace_dirs(ns)
 
     header = f"\n## Artifact-serving probe at {n}x (probe-local artifacts)\n"
     body = (
